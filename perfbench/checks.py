@@ -44,6 +44,12 @@ def ring_bucket(token: int, n: int) -> int:
     return perm[(token - MIN_TOKEN) // per]
 
 
+def check_written(sink: Path) -> list[str]:
+    """The sink directory is cleared before every operation, so its commit
+    marker shows that this operation wrote it."""
+    return [] if (sink / "_SUCCESS").is_file() else [f"{sink.name}: no _SUCCESS marker, the write did not commit"]
+
+
 def check_sink(sink: Path, expected_rows: int) -> tuple[list[str], dict]:
     """Row count and per-file token order. Returns (failures, stats) where
     stats carries files, bytes and rows per bucket."""

@@ -58,14 +58,6 @@ class EventLog:
         return sum(1 for ph, _ in self.jobs.values() if ph is not None and ph.startswith(phase_prefix))
 
 
-def event_files(path: Path) -> list[Path]:
-    """A plain log file, or the ``events_*`` parts of a rolling log dir."""
-    if path.is_file():
-        return [path]
-    parts = list(path.glob("events_*"))
-    return sorted(parts, key=lambda p: int(p.name.split("_")[1]))
-
-
 def _walk_plan(node: dict, out: dict[int, tuple[str, str]]) -> None:
     for m in node.get("metrics", []):
         out[m["accumulatorId"]] = (node["nodeName"], m["name"])
@@ -82,36 +74,35 @@ def _num(v) -> float:
 
 def read_event_log(path: Path) -> EventLog:
     log = EventLog()
-    for f in event_files(path):
-        with open(f) as fh:
-            for line in fh:
-                e = json.loads(line)
-                kind = e["Event"]
-                if kind == "SparkListenerJobStart":
-                    props = e.get("Properties") or {}
-                    log.jobs[e["Job ID"]] = (props.get(PHASE_PROPERTY), list(e["Stage IDs"]))
-                elif kind in (_SQL_START, _SQL_AQE):
-                    _walk_plan(e["sparkPlanInfo"], log.metric_nodes)
-                elif kind == "SparkListenerStageCompleted":
-                    info = e["Stage Info"]
-                    st = log.stages.setdefault(info["Stage ID"], Stage())
-                    st.tasks = info["Number of Tasks"]
-                    for a in info.get("Accumulables", []):
-                        name = a.get("Name") or ""
-                        if name == "internal.metrics.jvmGCTime":
-                            st.gc_ms = _num(a.get("Value"))
-                        elif not name.startswith("internal.metrics."):
-                            st.accums[a["ID"]] = _num(a.get("Value"))
-                elif kind == "SparkListenerTaskEnd":
-                    st = log.stages.setdefault(e["Stage ID"], Stage())
-                    info = e["Task Info"]
-                    if info.get("Failed") or e["Task End Reason"].get("Reason") != "Success":
-                        st.failed_tasks += 1
-                    metrics = e.get("Task Metrics") or {}
-                    st.task_run_ms.append(metrics.get("Executor Run Time", 0))
-                    reads = metrics.get("Shuffle Read Metrics") or {}
-                    if reads.get("Local Blocks Fetched", 0) or reads.get("Remote Blocks Fetched", 0):
-                        st.has_shuffle_read = True
+    with open(path) as fh:
+        for line in fh:
+            e = json.loads(line)
+            kind = e["Event"]
+            if kind == "SparkListenerJobStart":
+                props = e.get("Properties") or {}
+                log.jobs[e["Job ID"]] = (props.get(PHASE_PROPERTY), list(e["Stage IDs"]))
+            elif kind in (_SQL_START, _SQL_AQE):
+                _walk_plan(e["sparkPlanInfo"], log.metric_nodes)
+            elif kind == "SparkListenerStageCompleted":
+                info = e["Stage Info"]
+                st = log.stages.setdefault(info["Stage ID"], Stage())
+                st.tasks = info["Number of Tasks"]
+                for a in info.get("Accumulables", []):
+                    name = a.get("Name") or ""
+                    if name == "internal.metrics.jvmGCTime":
+                        st.gc_ms = _num(a.get("Value"))
+                    elif not name.startswith("internal.metrics."):
+                        st.accums[a["ID"]] = _num(a.get("Value"))
+            elif kind == "SparkListenerTaskEnd":
+                st = log.stages.setdefault(e["Stage ID"], Stage())
+                info = e["Task Info"]
+                if info.get("Failed") or e["Task End Reason"].get("Reason") != "Success":
+                    st.failed_tasks += 1
+                metrics = e.get("Task Metrics") or {}
+                st.task_run_ms.append(metrics.get("Executor Run Time", 0))
+                reads = metrics.get("Shuffle Read Metrics") or {}
+                if reads.get("Local Blocks Fetched", 0) or reads.get("Remote Blocks Fetched", 0):
+                    st.has_shuffle_read = True
     return log
 
 

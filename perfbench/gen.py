@@ -226,8 +226,13 @@ def curate_texts(seed: int, n: int) -> list[str]:
     near-duplicates, too-short docs and near-copies of benchmark docs; the
     rest are fresh 20-120 word docs over a Zipf-ish vocabulary."""
     rng = np.random.default_rng([seed, 3])
-    p = 1.0 / np.arange(1, len(VOCAB) + 1) ** 0.7
-    p /= p.sum()
+    cdf = np.cumsum(1.0 / np.arange(1, len(VOCAB) + 1) ** 0.7)
+    cdf /= cdf[-1]
+    vocab = np.array(VOCAB)
+
+    def draw(k: int) -> str:
+        return " ".join(vocab[np.searchsorted(cdf, rng.random(k))])
+
     kinds = rng.random(n)
     edges = np.cumsum([SHARE_EXACT_DUP, SHARE_NEAR_DUP, SHARE_SHORT, SHARE_BENCH_COPY])
     texts: list[str] = []
@@ -241,13 +246,13 @@ def curate_texts(seed: int, n: int) -> list[str]:
             words[int(rng.integers(0, len(words)))] = f"nd{i}"
             texts.append(" ".join(words))
         elif k < edges[2]:
-            texts.append(" ".join(rng.choice(VOCAB, int(rng.integers(1, 5)), p=p)))
+            texts.append(draw(int(rng.integers(1, 5))))
         elif bench_ids and k < edges[3]:
             words = texts[bench_ids[int(rng.integers(0, len(bench_ids)))]].split(" ")
             words[int(rng.integers(0, len(words)))] = f"bc{i}"
             texts.append(" ".join(words))
         else:
-            texts.append(" ".join(rng.choice(VOCAB, int(rng.integers(20, 121)), p=p)))
+            texts.append(draw(int(rng.integers(20, 121))))
         if is_bench_doc(i) and len(texts[i].split(" ")) >= 20:
             bench_ids.append(i)
     return texts

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Product-path benchmark for hdfs2cass_spark.
 
-    python3 perfbench/run.py --workload bulk_songstreams --seed 1 --seconds 12 --trace 0
+    python3 perfbench/run.py --workload bulk_songstreams --seed 1 --seconds 4 --trace 0
 
 Runs one seeded workload through the program's public entry points on
 ``local[<usable cpus>]``, checks every timed operation's output, and prints

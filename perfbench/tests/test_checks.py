@@ -95,6 +95,12 @@ def test_dropped_row_is_rejected(sink, users):
     assert any("rows" in m for m in fails)
 
 
+def test_uncommitted_sink_is_rejected(sink):
+    assert checks.check_written(sink) == ["sink: no _SUCCESS marker, the write did not commit"]
+    (sink / "_SUCCESS").write_text("")
+    assert checks.check_written(sink) == []
+
+
 def test_stream_buckets_must_match_batch_twin(tmp_path, users):
     a = write_sink(tmp_path / "a", users)
     b = write_sink(tmp_path / "b", users)

@@ -68,11 +68,3 @@ def test_failed_task_is_counted(tmp_path):
     c = eventlog.layer_counters(eventlog.read_event_log(f), "timed", operations=1)
     assert c["spark.failed_tasks"] == 1
 
-
-def test_rolling_log_directory(tmp_path):
-    lines = FIXTURE.read_text().splitlines(keepends=True)
-    half = len(lines) // 2
-    (tmp_path / "events_2_app").write_text("".join(lines[half:]))
-    (tmp_path / "events_1_app").write_text("".join(lines[:half]))
-    whole = eventlog.layer_counters(eventlog.read_event_log(FIXTURE), "timed", 1)
-    assert eventlog.layer_counters(eventlog.read_event_log(tmp_path), "timed", 1) == whole

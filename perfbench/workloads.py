@@ -1,20 +1,23 @@
 """The benchmark's workloads and the harness they share.
 
-Every workload: generate seeded inputs (cached), set up three times in
-one process (start a session, run one warm-up operation of the workload's
-own kind; ``setup_s`` is the median), then run timed operations in the last
-session for ``--seconds`` and check each one's output.
+Every workload: generate seeded inputs (cached), set up once (from process
+start: JVM and session start, then one warm-up operation of the workload's
+own kind on a small input; that is ``setup_s``), then run timed operations
+for ``--seconds`` and check each one's output.
 
-The traced run (``--trace 1``) does the same with Spark's event log on in
-the last session and spans recorded around every call into a layer. After
-the timed operations it runs the pipeline prefixes with a ``noop`` sink: a
-layer's time is how much the noop action grows when the prefix gains that
-layer.
+The traced run (``--trace 1``) first does exactly what the untraced run
+does, then restarts the session in the same process with Spark's event log
+on, warms up again and repeats the timed operations with spans recorded
+around every call into a layer, then restarts once more untraced and repeats
+them a third time. The tracing overhead compares the traced median operation
+time with the median of the untraced ones before and after it, so that the
+JIT warming over the run does not read as negative overhead. After those it
+runs the pipeline prefixes with a ``noop`` sink: a layer's time is how much
+the noop action grows when the prefix gains that layer.
 """
 
 from __future__ import annotations
 
-import json
 import shutil
 import statistics
 import sys
@@ -30,10 +33,16 @@ import gen
 from tracing import PeakRss, Tracer
 
 NOW_MS = 1_700_000_000_000  # fixed writetime fallback, so sinks are reproducible
-MIN_OPS = 3  # timed operations per run, even when --seconds runs out first
-EXTRA_SETUPS = 2
+MIN_OPS = 5  # timed bulk loads per run, even when --seconds runs out first
 
 PREFIXES = ("scan", "key", "token", "route", "sink")
+CURATE_STAGES = (("input", "base"), ("quality", "q"), ("exact_dedup", "deduped"), ("near_dup", "nd"), ("decontam", "clean"))
+CURATE_LAYER = (
+    "curate.quality_s", "curate.exact_dedup_s", "curate.near_dup_s", "curate.cc_s",
+    "curate.decontam_s", "curate.pack_s",
+    *(f"curate.rows_after_{name}" for name, _ in CURATE_STAGES),
+    "curate.lsh_candidates", "curate.lsh_verified", "curate.lsh_useful_ratio", "curate.cc_jobs",
+)
 PER_LAYER = (
     "sources.scan_s", "sources.python_s", "sources.tasks", "sources.rows",
     "reshape.key_s",
@@ -45,9 +54,11 @@ PER_LAYER = (
     "stream.add_batch_ms", "stream.planning_ms", "stream.commit_ms", "stream.latest_offset_ms",
     "spark.jobs", "spark.stages", "spark.tasks", "spark.failed_tasks",
     "spark.widest_stage_tasks", "spark.python_s", "spark.gc_s",
+    *CURATE_LAYER,
+    "mem.peak_rss_mb",
     "trace.overhead_pct", "trace.spans",
 )
-E2E_UNITS = {"setup_s": "s", "rows_per_s": "rows/s", "batch_p50_ms": "ms", "sink_bytes_per_row": "B/row", "peak_rss_mb": "MB"}
+E2E_UNITS = {"setup_s": "s", "rows_per_s": "rows/s", "batch_p50_ms": "ms", "sink_bytes_per_row": "B/row"}
 
 
 def layer_unit(name: str) -> str:
@@ -55,6 +66,8 @@ def layer_unit(name: str) -> str:
         return "s"
     if name.endswith("_ms"):
         return "ms"
+    if name.endswith("_mb"):
+        return "MB"
     if name.endswith("bytes") or "bytes_" in name:
         return "B"
     if name.endswith("_pct"):
@@ -80,7 +93,7 @@ class Bench:
     process_start: float
     spark: object = None
     gen_s: float = 0.0
-    setups: list[float] = field(default_factory=list)
+    setup_s: float = 0.0
 
     def __post_init__(self):
         self.tracer = Tracer(run_id=f"seed{self.seed}-{int(time.time())}", enabled=False)
@@ -99,6 +112,8 @@ class Bench:
         return p
 
     def _start(self, eventlog_dir: Path | None) -> None:
+        """The program's own session; the benchmark passes only where to
+        keep scratch files and, when tracing, where to write the event log."""
         from hdfs2cass_spark.session import get_session
 
         tmp = self.work / "tmp"
@@ -106,10 +121,6 @@ class Bench:
             "spark.local.dir": str(tmp / "spark-local"),
             "spark.sql.warehouse.dir": str(tmp / "warehouse"),
             "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp}",
-            # a heap the 1M-row sort fits in without spilling; a small cap
-            # also keeps the JVM's resident size, and so peak_rss_mb, steady
-            "spark.driver.memory": "1g",
-            "spark.ui.showConsoleProgress": "false",
         }
         if eventlog_dir is not None:
             eventlog_dir.mkdir(parents=True, exist_ok=True)
@@ -118,6 +129,7 @@ class Bench:
                     "spark.eventLog.enabled": "true",
                     "spark.eventLog.dir": eventlog_dir.as_uri(),
                     "spark.eventLog.compress": "false",
+                    "spark.eventLog.rolling.enabled": "false",  # one file, not a directory of parts
                 }
             )
         self.spark = get_session("perfbench", extra_conf=conf)
@@ -128,65 +140,55 @@ class Bench:
             self.spark.stop()
             self.spark = None
 
-    def setup(self, warmup: Callable[[object], None], eventlog_dir: Path | None = None) -> None:
-        """(Re)start the session and run ``warmup``; the first set-up counts
-        from process start (input generation excluded)."""
-        self.stop()
-        t = time.perf_counter()
-        self._start(eventlog_dir)
+    def setup(self, warmup: Callable[[], None]) -> None:
+        """Start the session and run ``warmup``. ``setup_s`` counts from
+        process start, input generation excluded."""
+        self._start(None)
         self.phase("warmup")
-        warmup(self.spark)
-        end = time.perf_counter()
-        self.setups.append(end - (self.process_start + self.gen_s) if not self.setups else end - t)
-        self.log(f"set-up {len(self.setups)}: {self.setups[-1]:.2f}s")
+        warmup()
+        self.setup_s = time.perf_counter() - (self.process_start + self.gen_s)
+        self.log(f"set-up: {self.setup_s:.2f}s")
+
+    def restart(self, warmup: Callable[[], None], eventlog_dir: Path | None) -> None:
+        """Restart the session, traced (event log on, spans recorded) when
+        ``eventlog_dir`` is given, and warm it up again: a new session
+        starts new Python workers."""
+        self.stop()
+        self._start(eventlog_dir)
+        self.tracer.enabled = eventlog_dir is not None
+        self.phase("warmup")
+        warmup()
 
     def log(self, msg: str) -> None:
         print(f"perfbench [{time.perf_counter() - self.process_start:7.2f}s] {msg}", file=sys.stderr, flush=True)
-
-    def prepare(self, warmup: Callable[[object], None], eventlog_dir: Path | None = None) -> None:
-        """Set up 1 + EXTRA_SETUPS times before timing. The JVM outlives
-        each session, so the repeated warm-ups also bring its JIT closer to
-        steady state. The last session stays open for the timed operations;
-        it is the one that logs events when ``eventlog_dir`` is given."""
-        for i in range(1 + EXTRA_SETUPS):
-            self.setup(warmup, eventlog_dir if i == EXTRA_SETUPS else None)
-        self.tracer.enabled = self.trace
 
     def phase(self, name: str) -> None:
         self.log(f"phase {name}")
         self.spark.sparkContext.setLocalProperty(eventlog.PHASE_PROPERTY, name)
 
-    def loop(self, op: Callable[[int], Op], seconds: float, min_ops: int) -> list[Op]:
+    def loop(self, op: Callable[[int], Op], min_ops: int) -> list[Op]:
+        """Timed operations for ``--seconds``, at least ``min_ops`` of them."""
+        self.phase("timed")
         out: list[Op] = []
-        deadline = time.perf_counter() + seconds
+        deadline = time.perf_counter() + self.seconds
         while len(out) < min_ops or time.perf_counter() < deadline:
-            t = time.perf_counter()
-            try:
-                out.append(op(len(out)))
-            except Exception as e:  # an operation that raises counts as failed; the run goes on
-                out.append(Op(time.perf_counter() - t, [f"raised {type(e).__name__}: {e}"], {"bytes": 0}))
-            self.log(f"operation {len(out) - 1}: {out[-1].seconds:.2f}s{' FAILED' if out[-1].fails else ''}")
+            out.append(self._attempt(op, len(out)))
         return out
+
+    def _attempt(self, op: Callable[[int], Op], i: int) -> Op:
+        t = time.perf_counter()
+        try:
+            done = op(i)
+        except Exception as e:  # an operation that raises counts as failed; the run goes on
+            done = Op(time.perf_counter() - t, [f"raised {type(e).__name__}: {e}"], {"bytes": 0})
+        self.log(f"operation {i}: {done.seconds:.2f}s{' FAILED' if done.fails else ''}")
+        return done
 
     def out_path(self, workload: str) -> Path:
         return self.work / "out" / f"trace-{workload}-seed{self.seed}.json"
 
-    def save_untraced(self, workload: str, op_s: float) -> None:
-        """Add this untraced run's median operation time to the workload's
-        record, the base of a later traced run's overhead."""
-        runs = self.untraced_runs(workload)
-        runs.append({"seed": self.seed, "op_s": op_s})
-        p = self.work / "out" / f"untraced-{workload}.json"
-        p.parent.mkdir(parents=True, exist_ok=True)
-        p.write_text(json.dumps(runs))
 
-    def untraced_runs(self, workload: str) -> list[dict]:
-        p = self.work / "out" / f"untraced-{workload}.json"
-        return json.loads(p.read_text()) if p.exists() else []
-
-
-def _median(xs):
-    return statistics.median(xs) if xs else 0.0
+_median = statistics.median  # raises on no samples rather than reading as 0
 
 
 def _result(ops_attempted: int, ops_failed: int, metrics: dict[str, float], units: Callable[[str], str]) -> dict:
@@ -214,6 +216,7 @@ def noop(df) -> None:
 @dataclass(frozen=True)
 class BulkSpec:
     rows: int
+    warm_rows: int  # the warm-up input: the same number of files, few rows
     files: int
     write: Callable[[Path, int, int, int], None]
     pattern: str
@@ -242,11 +245,11 @@ def _read_avro(spark, paths):
 
 
 SONGSTREAMS = BulkSpec(
-    rows=1_000_000, files=8, write=gen.write_songstreams, pattern="*.parquet", read=_read_parquet,
+    rows=300_000, warm_rows=16_000, files=8, write=gen.write_songstreams, pattern="*.parquet", read=_read_parquet,
     rowkey="user_id", timestamp="timestamp", key_columns=["user_id"], encode_key=checks.songstream_key,
 )
 LINEITEM_AVRO = BulkSpec(
-    rows=200_000, files=4, write=gen.write_lineitem_avro, pattern="*.avro", read=_read_avro,
+    rows=200_000, warm_rows=8_000, files=4, write=gen.write_lineitem_avro, pattern="*.avro", read=_read_avro,
     rowkey=["l_orderkey", "l_linenumber"], timestamp=None,
     key_columns=["l_orderkey", "l_linenumber"], encode_key=checks.lineitem_key,
 )
@@ -330,21 +333,63 @@ def _read_log(log_dir: Path) -> eventlog.EventLog:
     return eventlog.read_event_log(apps[-1])
 
 
-def _finish_trace(b: Bench, workload: str, layers: dict[str, float], traced: list[float]) -> dict:
+def _finish_trace(b: Bench, workload: str, layers: dict[str, float], untraced: list[float], traced: list[float]) -> dict:
     """Fill the per-layer table, compare the traced median operation time
-    with the median over this workload's untraced runs in this checkout,
-    and write the span file."""
-    base = b.untraced_runs(workload)
-    untraced = _median([r["op_s"] for r in base])
-    layers["trace.overhead_pct"] = 100.0 * (_median(traced) / untraced - 1.0) if base else 0.0
+    with the untraced one of the same run (before and after the traced
+    session), and write the span file."""
+    layers["trace.overhead_pct"] = 100.0 * (_median(traced) / _median(untraced) - 1.0)
     layers["trace.spans"] = len(b.tracer.spans)
     for name in PER_LAYER:
         layers.setdefault(name, 0.0)
     b.tracer.write(
         b.out_path(workload),
-        {"workload": workload, "seed": b.seed, "per_layer": layers, "traced_op_s": traced, "untraced": base},
+        {"workload": workload, "seed": b.seed, "per_layer": layers, "untraced_op_s": untraced, "traced_op_s": traced},
     )
     return {k: layers[k] for k in PER_LAYER}
+
+
+@dataclass
+class Measured:
+    ops: list[Op]  # the untraced timed operations
+    peak_mb: float
+    traced: list[Op] = field(default_factory=list)
+    layers: dict[str, float] = field(default_factory=dict)  # from ``in_trace``
+    after: list[Op] = field(default_factory=list)  # untraced, after the traced session
+
+
+def _measure(
+    b: Bench,
+    warmup: Callable[[], None],
+    op: Callable[[int], Op],
+    min_ops: int,
+    log_dir: Path | None,
+    in_trace: Callable[[], dict[str, float]],
+) -> Measured:
+    """Set up, run the timed operations and sample the peak RSS. When
+    tracing, run them again in a traced session, then ``in_trace`` (the
+    layer split) in the same session, then the operations once more in an
+    untraced one."""
+    b.setup(warmup)
+    with PeakRss() as rss:
+        m = Measured(b.loop(op, min_ops), rss.peak_mb)
+    if log_dir is not None:
+        b.restart(warmup, log_dir)
+        m.traced = b.loop(op, min_ops)
+        m.layers = in_trace()
+        b.restart(warmup, None)
+        m.after = b.loop(op, min_ops)
+    b.stop()
+    return m
+
+
+def _end_to_end(b: Bench, ops: list[Op], rows: int) -> dict[str, float]:
+    op_s = _median([o.seconds for o in ops])
+    return {
+        "setup_s": b.setup_s,
+        "rows_per_s": rows / op_s,
+        "batch_p50_ms": op_s * 1000,
+        "sink_bytes_per_row": _median([o.stats["bytes"] for o in ops]) / rows,
+    }
 
 
 def run_bulk(b: Bench, workload: str, spec: BulkSpec) -> dict:
@@ -352,50 +397,38 @@ def run_bulk(b: Bench, workload: str, spec: BulkSpec) -> dict:
         f"{workload}-seed{b.seed}-{spec.rows}x{spec.files}",
         lambda d: spec.write(d, b.seed, spec.rows, spec.files),
     )
+    warm = b.inputs(
+        f"{workload}-seed{b.seed}-{spec.warm_rows}x{spec.files}",
+        lambda d: spec.write(d, b.seed + 1, spec.warm_rows, spec.files),
+    )
     files = [str(p) for p in sorted(inp.glob(spec.pattern))]
-    warm_sink = b.scratch("warm-sink")
-    sink = b.scratch("sink")
 
-    def warmup(spark) -> None:
-        # all files, so every scan task has started its Python worker
-        _bulk_call(b, spec, files, warm_sink)
+    def warmup() -> None:
+        # as many files as the timed input, so every scan task starts its Python worker
+        _bulk_call(b, spec, [str(p) for p in sorted(warm.glob(spec.pattern))], b.scratch("warm-sink"))
 
     def op(i: int) -> Op:
+        sink = b.scratch("sink")  # so a write that did not happen cannot pass on old files
         with b.tracer.span("op", op=i):
             t = time.perf_counter()
             _bulk_call(b, spec, files, sink)
             dt = time.perf_counter() - t
         fails, stats = _check_bulk(b, spec, sink, spec.rows, i)
-        return Op(dt, fails, stats)
+        return Op(dt, checks.check_written(sink) + fails, stats)
 
     log_dir = b.scratch("eventlog") if b.trace else None
-    b.prepare(warmup, log_dir)
-    b.phase("timed")
-    with PeakRss() as rss:
-        ops = b.loop(op, b.seconds, MIN_OPS)
-    op_s = [o.seconds for o in ops]
-    if b.trace:
-        prefix = _prefix_times(b, spec, files, reps=2)
-    b.stop()
-    _report_failures(ops)
-    failed = sum(1 for o in ops if o.fails)
-    if b.trace:
-        layers = _layer_split(prefix)
-        layers.update(eventlog.layer_counters(_read_log(log_dir), "timed", len(ops)))
-        layers.update(_sink_layer(ops[-1].stats))
-        return _result(len(ops), failed, _finish_trace(b, workload, layers, op_s), layer_unit)
-    b.save_untraced(workload, _median(op_s))
-    return _result(
-        len(ops), failed,
-        {
-            "setup_s": _median(b.setups),
-            "rows_per_s": spec.rows / _median(op_s),
-            "batch_p50_ms": _median(op_s) * 1000,
-            "sink_bytes_per_row": _median([o.stats["bytes"] for o in ops]) / spec.rows,
-            "peak_rss_mb": rss.peak_mb,
-        },
-        E2E_UNITS.get,
-    )
+    m = _measure(b, warmup, op, MIN_OPS, log_dir, lambda: _layer_split(_prefix_times(b, spec, files, reps=2)))
+    checked = m.ops + m.traced + m.after
+    _report_failures(checked)
+    failed = sum(1 for o in checked if o.fails)
+    if not b.trace:
+        return _result(len(checked), failed, _end_to_end(b, m.ops, spec.rows), E2E_UNITS.get)
+    layers = m.layers
+    layers["mem.peak_rss_mb"] = m.peak_mb
+    layers.update(eventlog.layer_counters(_read_log(log_dir), "timed", len(m.traced)))
+    layers.update(_sink_layer(m.traced[-1].stats))
+    metrics = _finish_trace(b, workload, layers, [o.seconds for o in m.ops + m.after], [o.seconds for o in m.traced])
+    return _result(len(checked), failed, metrics, layer_unit)
 
 
 # --- streaming ingest --------------------------------------------------------
@@ -403,15 +436,17 @@ def run_bulk(b: Bench, workload: str, spec: BulkSpec) -> dict:
 STREAM_ROWS_PER_FILE = 10_000
 STREAM_WARM_FILES = 1
 STREAM_BATCH_S = 1.5
+STREAM_MIN_FILES = 5  # the first batch is not a sample, so at least 4 samples
 
 
 def run_stream(b: Bench, workload: str) -> dict:
     """Closed loop: ``stream_bulk_load`` drains a backlog of landed files
     with ``maxFilesPerTrigger=1`` and ``availableNow``; the next micro-batch
     starts when the previous one commits. The backlog is sized from
-    ``--seconds`` at 1.5 s per batch (1.2-1.6 s measured on a 4-core host),
-    so the work per run is fixed for a given run length."""
-    n_files = max(6, round(b.seconds / STREAM_BATCH_S))
+    ``--seconds`` at 1.5 s per batch (1.3-2.3 s measured on a 4-core host),
+    at least ``STREAM_MIN_FILES`` files, so the work per run is fixed for a
+    given run length."""
+    n_files = max(STREAM_MIN_FILES, round(b.seconds / STREAM_BATCH_S))
     rows = n_files * STREAM_ROWS_PER_FILE
 
     inp = b.inputs(
@@ -436,63 +471,79 @@ def run_stream(b: Bench, workload: str) -> dict:
             raise RuntimeError(f"streaming query failed: {q.exception()}")
         return wall, [p for p in q.recentProgress if p["numInputRows"] > 0], sink
 
-    def warmup(spark) -> None:
+    def check(sink: Path, progress: list[dict]) -> tuple[list[str], dict]:
+        with b.tracer.span("check"):
+            fails = [] if len(progress) == n_files else [f"{len(progress)} non-empty micro-batches, want {n_files}"]
+            more, stats = checks.check_sink(sink, rows)
+            fails += more
+            fails += checks.check_token_sample(sink, SONGSTREAMS.reducers, ["user_id"], checks.songstream_key, b.seed)
+            fails += checks.bucket_multisets_equal(sink, reference, ["token", "user_id", "song_id", "writetime"])
+        for msg in fails:
+            print(f"perfbench: stream check failed: {msg}", file=sys.stderr)
+        return fails, stats
+
+    def warmup() -> None:
         stream(inp / "warm", "warm")
 
-    log_dir = b.scratch("eventlog") if b.trace else None
-    b.prepare(warmup, log_dir)
+    b.setup(warmup)
     # the batch twin of the same files, once and outside timing
     b.phase("reference")
     reference = b.scratch("stream-reference")
     _bulk_call(b, SONGSTREAMS, main_files, reference)
     b.phase("timed")
-    with PeakRss() as rss, b.tracer.span("stream", files=n_files):
+    with PeakRss() as rss:
         wall, progress, sink = stream(inp / "main", "main")
-    with b.tracer.span("check"):
-        fails, stats = checks.check_sink(sink, rows)
-        fails += checks.check_token_sample(sink, SONGSTREAMS.reducers, ["user_id"], checks.songstream_key, b.seed)
-        fails += checks.bucket_multisets_equal(sink, reference, ["token", "user_id", "song_id", "writetime"])
-    for msg in fails:
-        print(f"perfbench: stream check failed: {msg}", file=sys.stderr)
-    batch_ms = [p["durationMs"]["triggerExecution"] for p in progress]
-    failed = len(batch_ms) if fails else 0
-    if b.trace:
-        prefix = _prefix_times(b, SONGSTREAMS, main_files[:1], reps=2)
-    b.stop()
+    fails, stats = check(sink, progress)
     # the first measured batch pays the query start; it is reported in the
     # span file but not in the batch percentiles
-    steady = batch_ms[1:]
+    steady = [p["durationMs"]["triggerExecution"] for p in progress[1:]]
+    b.log(f"micro-batches: {wall:.2f}s, trigger times (ms) {[p['durationMs']['triggerExecution'] for p in progress]}")
     if not b.trace:
-        b.save_untraced(workload, _median(steady) / 1000)
+        b.stop()
         return _result(
-            len(batch_ms), failed,
+            n_files, n_files if fails else 0,
             {
-                "setup_s": _median(b.setups),
+                "setup_s": b.setup_s,
                 "rows_per_s": rows / wall,
                 "batch_p50_ms": _median(steady),
                 "sink_bytes_per_row": stats["bytes"] / rows,
-                "peak_rss_mb": rss.peak_mb,
             },
             E2E_UNITS.get,
         )
 
-    _add_batch_spans(b.tracer, progress)
+    log_dir = b.scratch("eventlog")
+    b.restart(warmup, log_dir)
+    b.phase("timed")
+    with b.tracer.span("stream", files=n_files):
+        _, t_progress, t_sink = stream(inp / "main", "traced")
+    t_fails, t_stats = check(t_sink, t_progress)
+    prefix = _prefix_times(b, SONGSTREAMS, main_files[:1], reps=2)
+    b.restart(warmup, None)
+    b.phase("timed")
+    _, a_progress, a_sink = stream(inp / "main", "after")
+    a_fails, _ = check(a_sink, a_progress)
+    b.stop()
+    _add_batch_spans(b.tracer, t_progress)
 
     def dur(k: str) -> float:
-        return _median([p["durationMs"].get(k, 0) for p in progress[1:]])
+        return _median([p["durationMs"].get(k, 0) for p in t_progress[1:]])
 
     layers = _layer_split(prefix)
-    layers.update(eventlog.layer_counters(_read_log(log_dir), "timed", len(progress)))
-    layers.update(_sink_layer(stats))
+    layers.update(eventlog.layer_counters(_read_log(log_dir), "timed", len(t_progress)))
+    layers.update(_sink_layer(t_stats))
     layers.update(
         {
+            "mem.peak_rss_mb": rss.peak_mb,
             "stream.add_batch_ms": dur("addBatch"),
             "stream.planning_ms": dur("queryPlanning"),
             "stream.commit_ms": dur("commitOffsets"),
             "stream.latest_offset_ms": dur("latestOffset"),
         }
     )
-    return _result(len(batch_ms), failed, _finish_trace(b, workload, layers, [ms / 1000 for ms in steady]), layer_unit)
+    t_steady = [p["durationMs"]["triggerExecution"] / 1000 for p in t_progress[1:]]
+    untraced = [ms / 1000 for ms in steady] + [p["durationMs"]["triggerExecution"] / 1000 for p in a_progress[1:]]
+    metrics = _finish_trace(b, workload, layers, untraced, t_steady)
+    return _result(3 * n_files, n_files * (bool(fails) + bool(t_fails) + bool(a_fails)), metrics, layer_unit)
 
 
 def _add_batch_spans(tracer: Tracer, progress: list[dict]) -> None:
@@ -512,15 +563,9 @@ def _add_batch_spans(tracer: Tracer, progress: list[dict]) -> None:
 
 # --- curation chain ----------------------------------------------------------
 
-CURATE_DOCS = 10_000
-CURATE_WARM_DOCS = 1_000
-CURATE_STAGES = (("input", "base"), ("quality", "q"), ("exact_dedup", "deduped"), ("near_dup", "nd"), ("decontam", "clean"))
-CURATE_LAYER = (
-    "curate.quality_s", "curate.exact_dedup_s", "curate.near_dup_s", "curate.cc_s",
-    "curate.decontam_s", "curate.pack_s",
-    *(f"curate.rows_after_{name}" for name, _ in CURATE_STAGES),
-    "curate.lsh_candidates", "curate.lsh_verified", "curate.lsh_useful_ratio", "curate.cc_jobs",
-)
+CURATE_DOCS = 2_000
+CURATE_WARM_DOCS = 500
+CURATE_MIN_OPS = 1  # one curate run takes 8-12 s on a 4-core host
 
 
 def _timed(fn) -> float:
@@ -529,7 +574,7 @@ def _timed(fn) -> float:
     return time.perf_counter() - t
 
 
-def _curate_layers(b: Bench, src: Path, log_dir: Path) -> dict[str, float]:
+def _curate_layers(b: Bench, src: Path) -> dict[str, float]:
     """Stage split of the curation chain from its public pieces. Building
     ``curate_stage_dfs`` runs quality filter, exact dedup, LSH pairs and
     connected components eagerly; the LSH and CC shares are re-measured on
@@ -595,7 +640,6 @@ def run_curate(b: Bench, workload: str) -> dict:
         f"{workload}-seed{b.seed}-{CURATE_WARM_DOCS}", lambda d: gen.write_curate_docs(d, b.seed, CURATE_WARM_DOCS)
     )
     texts = gen.pq.read_table(src / "documents.parquet").sort_by("doc_id").column("text").to_pylist()
-    sink = b.scratch("curated")
 
     def curate(path: Path, out: Path) -> None:
         from hdfs2cass_spark.plans.compose import curate_corpus
@@ -603,51 +647,36 @@ def run_curate(b: Bench, workload: str) -> dict:
         with b.tracer.span("plans.compose.curate_corpus"):
             df = curate_corpus(b.spark, str(path))
         with b.tracer.span("write"):
-            df.write.mode("overwrite").parquet(str(out))
+            df.write.parquet(str(out))
 
-    def warmup(spark) -> None:
+    def warmup() -> None:
         curate(warm_src, b.scratch("curated-warm"))
 
     def op(i: int) -> Op:
+        sink = b.scratch("curated")  # so a write that did not happen cannot pass on old files
         with b.tracer.span("op", op=i):
             t = time.perf_counter()
             curate(src, sink)
             dt = time.perf_counter() - t
         with b.tracer.span("check"):
-            table = gen.pq.read_table(sink)
-            fails = checks.check_curated(table, texts, gen.is_bench_doc, MIN_WORDS, PACK_BUDGET)
+            fails = checks.check_written(sink)
+            fails += checks.check_curated(gen.pq.read_table(sink), texts, gen.is_bench_doc, MIN_WORDS, PACK_BUDGET)
         return Op(dt, fails, {"bytes": sum(f.stat().st_size for f in sink.glob("*.parquet"))})
 
     log_dir = b.scratch("eventlog") if b.trace else None
-    b.prepare(warmup, log_dir)
-    b.phase("timed")
-    with PeakRss() as rss:
-        ops = b.loop(op, b.seconds, 1 if b.trace else MIN_OPS)
-    op_s = [o.seconds for o in ops]
-    if b.trace:
-        layers = _curate_layers(b, src, log_dir)
-    b.stop()
-    _report_failures(ops)
-    failed = sum(1 for o in ops if o.fails)
-    if b.trace:
-        log = _read_log(log_dir)
-        layers.update(eventlog.layer_counters(log, "timed", len(ops)))
-        layers["curate.cc_jobs"] = log.phase_jobs("curate:cc")
-        metrics = _finish_trace(b, workload, layers, op_s)
-        metrics.update({k: layers[k] for k in CURATE_LAYER})
-        return _result(len(ops), failed, metrics, layer_unit)
-    b.save_untraced(workload, _median(op_s))
-    return _result(
-        len(ops), failed,
-        {
-            "setup_s": _median(b.setups),
-            "rows_per_s": CURATE_DOCS / _median(op_s),
-            "batch_p50_ms": _median(op_s) * 1000,
-            "sink_bytes_per_row": _median([o.stats["bytes"] for o in ops]) / CURATE_DOCS,
-            "peak_rss_mb": rss.peak_mb,
-        },
-        E2E_UNITS.get,
-    )
+    m = _measure(b, warmup, op, CURATE_MIN_OPS, log_dir, lambda: _curate_layers(b, src))
+    checked = m.ops + m.traced + m.after
+    _report_failures(checked)
+    failed = sum(1 for o in checked if o.fails)
+    if not b.trace:
+        return _result(len(checked), failed, _end_to_end(b, m.ops, CURATE_DOCS), E2E_UNITS.get)
+    layers = m.layers
+    layers["mem.peak_rss_mb"] = m.peak_mb
+    log = _read_log(log_dir)
+    layers.update(eventlog.layer_counters(log, "timed", len(m.traced)))
+    layers["curate.cc_jobs"] = log.phase_jobs("curate:cc")
+    metrics = _finish_trace(b, workload, layers, [o.seconds for o in m.ops + m.after], [o.seconds for o in m.traced])
+    return _result(len(checked), failed, metrics, layer_unit)
 
 
 WORKLOADS: dict[str, Callable[[Bench], dict]] = {
