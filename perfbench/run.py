@@ -13,7 +13,8 @@ written under ``.perfbench/out/``. Everything the run writes (inputs, sinks,
 Spark scratch, event logs) stays under ``.perfbench/`` in the checkout.
 
 Exit status: 0 when every check passed, 1 when a check failed, 2 when the
-program is not in the checkout or the arguments are bad.
+program is not in the checkout or the arguments are bad. The run stops the
+Spark JVM and its Python workers and waits for them to end before it exits.
 """
 
 from __future__ import annotations
@@ -23,8 +24,12 @@ import time
 T_PROCESS_START = time.perf_counter()
 
 import argparse  # noqa: E402
+import contextlib  # noqa: E402
+import ctypes  # noqa: E402
 import json  # noqa: E402
 import os  # noqa: E402
+import signal  # noqa: E402
+import subprocess  # noqa: E402
 import sys  # noqa: E402
 from pathlib import Path  # noqa: E402
 
@@ -59,6 +64,47 @@ def _steal_seconds() -> float:
     return int(fields[8]) / os.sysconf("SC_CLK_TCK") if len(fields) > 8 else 0.0
 
 
+PR_SET_CHILD_SUBREAPER = 36
+
+
+def _adopt_orphans() -> None:
+    """Make this process the subreaper of everything started under it, so a
+    process whose parent ends first (a Python worker of the JVM) is
+    re-parented here and can still be waited for."""
+    ctypes.CDLL(None, use_errno=True).prctl(PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0)
+
+
+def _stop_processes(timeout: float = 60.0) -> None:
+    """Stop the Spark JVM this process launched and wait until it and every
+    other process started under this one has ended; kill what is still
+    running after ``timeout`` seconds."""
+    from tracing import process_tree
+
+    pyspark = sys.modules.get("pyspark")
+    gateway = pyspark.SparkContext._gateway if pyspark is not None else None
+    proc = getattr(gateway, "proc", None)
+    if proc is not None:
+        proc.stdin.close()  # the JVM exits when its stdin reaches EOF
+        try:
+            proc.wait(timeout)
+        except subprocess.TimeoutExpired:
+            proc.kill()
+            proc.wait()
+        pyspark.SparkContext._gateway = pyspark.SparkContext._jvm = None
+    deadline = time.perf_counter() + timeout
+    while True:
+        try:
+            pid, _ = os.waitpid(-1, os.WNOHANG if time.perf_counter() < deadline else 0)
+        except ChildProcessError:  # no child left
+            return
+        if pid == 0:
+            time.sleep(0.05)
+            if time.perf_counter() >= deadline:
+                for p in process_tree(os.getpid()) - {os.getpid()}:
+                    with contextlib.suppress(ProcessLookupError):
+                        os.kill(p, signal.SIGKILL)
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
     ap.add_argument("--workload", required=True)
@@ -71,6 +117,7 @@ def main(argv: list[str] | None = None) -> int:
         print(f"perfbench: no hdfs2cass_spark package under {ROOT}", file=sys.stderr)
         return 2
     _prepare_environment()
+    _adopt_orphans()
     import workloads
 
     if args.workload not in workloads.WORKLOADS:
@@ -81,10 +128,16 @@ def main(argv: list[str] | None = None) -> int:
         process_start=T_PROCESS_START,
     )
     steal = _steal_seconds()
+    # a SIGTERM still runs the clean-up below
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(128 + signal.SIGTERM))
     try:
         result = workloads.WORKLOADS[args.workload](bench)
     finally:
-        bench.stop()
+        signal.signal(signal.SIGTERM, signal.SIG_IGN)  # let the clean-up finish
+        try:
+            bench.stop()
+        finally:
+            _stop_processes()
     # other tenants' load on a shared host shows up as stolen CPU time
     bench.log(f"cpu time stolen by the host during the run: {_steal_seconds() - steal:.1f}s")
     print(json.dumps(result))

@@ -79,9 +79,9 @@ class Tracer:
         path.write_text(json.dumps({"spans": self.spans, "self_s": self.self_times(), **extra}, indent=1))
 
 
-def _tree_rss_bytes(root: int) -> int:
-    """Summed RSS of ``root`` and all its descendants (driver JVM and
-    Python workers are children of this process)."""
+def process_tree(root: int) -> set[int]:
+    """``root`` and all its live descendants (the driver JVM is a child of
+    this process, its Python workers are the JVM's children)."""
     parent: dict[int, int] = {}
     for d in os.listdir("/proc"):
         if not d.isdigit():
@@ -91,7 +91,9 @@ def _tree_rss_bytes(root: int) -> int:
                 stat = f.read()
         except OSError:
             continue
-        parent[int(d)] = int(stat.rsplit(")", 1)[1].split()[1])
+        state, ppid = stat.rsplit(")", 1)[1].split()[:2]
+        if state not in "ZX":
+            parent[int(d)] = int(ppid)
     tree, frontier = {root}, [root]
     while frontier:
         p = frontier.pop()
@@ -99,9 +101,14 @@ def _tree_rss_bytes(root: int) -> int:
             if pp == p and c not in tree:
                 tree.add(c)
                 frontier.append(c)
+    return tree
+
+
+def _tree_rss_bytes(root: int) -> int:
+    """Summed RSS of ``root`` and all its descendants."""
     page = os.sysconf("SC_PAGE_SIZE")
     total = 0
-    for pid in tree:
+    for pid in process_tree(root):
         try:
             with open(f"/proc/{pid}/statm") as f:
                 total += int(f.read().split()[1]) * page

@@ -33,7 +33,9 @@ import gen
 from tracing import PeakRss, Tracer
 
 NOW_MS = 1_700_000_000_000  # fixed writetime fallback, so sinks are reproducible
-MIN_OPS = 5  # timed bulk loads per run, even when --seconds runs out first
+MIN_OPS = 7  # bulk loads per run, even when --seconds runs out first
+RAMP_OPS = 2  # the first bulk loads, while the JIT still warms: checked, not in the medians
+TRACED_MIN_OPS = 5  # per session of the traced run, which runs three, so it ends well within 180 s
 
 PREFIXES = ("scan", "key", "token", "route", "sink")
 CURATE_STAGES = (("input", "base"), ("quality", "q"), ("exact_dedup", "deduped"), ("near_dup", "nd"), ("decontam", "clean"))
@@ -417,26 +419,29 @@ def run_bulk(b: Bench, workload: str, spec: BulkSpec) -> dict:
         return Op(dt, checks.check_written(sink) + fails, stats)
 
     log_dir = b.scratch("eventlog") if b.trace else None
-    m = _measure(b, warmup, op, MIN_OPS, log_dir, lambda: _layer_split(_prefix_times(b, spec, files, reps=2)))
+    min_ops = TRACED_MIN_OPS if b.trace else MIN_OPS
+    m = _measure(b, warmup, op, min_ops, log_dir, lambda: _layer_split(_prefix_times(b, spec, files, reps=2)))
     checked = m.ops + m.traced + m.after
     _report_failures(checked)
     failed = sum(1 for o in checked if o.fails)
     if not b.trace:
-        return _result(len(checked), failed, _end_to_end(b, m.ops, spec.rows), E2E_UNITS.get)
+        return _result(len(checked), failed, _end_to_end(b, m.ops[RAMP_OPS:], spec.rows), E2E_UNITS.get)
     layers = m.layers
     layers["mem.peak_rss_mb"] = m.peak_mb
     layers.update(eventlog.layer_counters(_read_log(log_dir), "timed", len(m.traced)))
     layers.update(_sink_layer(m.traced[-1].stats))
-    metrics = _finish_trace(b, workload, layers, [o.seconds for o in m.ops + m.after], [o.seconds for o in m.traced])
+    untraced = [o.seconds for o in m.ops[RAMP_OPS:] + m.after[RAMP_OPS:]]
+    metrics = _finish_trace(b, workload, layers, untraced, [o.seconds for o in m.traced[RAMP_OPS:]])
     return _result(len(checked), failed, metrics, layer_unit)
 
 
 # --- streaming ingest --------------------------------------------------------
 
 STREAM_ROWS_PER_FILE = 10_000
-STREAM_WARM_FILES = 1
+STREAM_WARM_FILES = 2
 STREAM_BATCH_S = 1.5
-STREAM_MIN_FILES = 5  # the first batch is not a sample, so at least 4 samples
+STREAM_RAMP = 2  # the first batches pay the query start and a warming JIT: not samples
+STREAM_MIN_FILES = 7  # so at least 5 samples
 
 
 def run_stream(b: Bench, workload: str) -> dict:
@@ -450,7 +455,7 @@ def run_stream(b: Bench, workload: str) -> dict:
     rows = n_files * STREAM_ROWS_PER_FILE
 
     inp = b.inputs(
-        f"{workload}-seed{b.seed}-{n_files}x{STREAM_ROWS_PER_FILE}",
+        f"{workload}-seed{b.seed}-{STREAM_WARM_FILES}+{n_files}x{STREAM_ROWS_PER_FILE}",
         lambda d: gen.write_stream_files(d, b.seed, STREAM_WARM_FILES, n_files, STREAM_ROWS_PER_FILE),
     )
     main_files = [str(p) for p in sorted((inp / "main").glob("*.parquet"))]
@@ -494,9 +499,9 @@ def run_stream(b: Bench, workload: str) -> dict:
     with PeakRss() as rss:
         wall, progress, sink = stream(inp / "main", "main")
     fails, stats = check(sink, progress)
-    # the first measured batch pays the query start; it is reported in the
-    # span file but not in the batch percentiles
-    steady = [p["durationMs"]["triggerExecution"] for p in progress[1:]]
+    # the first measured batches are reported in the span file but are not
+    # samples of the batch time
+    steady = [p["durationMs"]["triggerExecution"] for p in progress[STREAM_RAMP:]]
     b.log(f"micro-batches: {wall:.2f}s, trigger times (ms) {[p['durationMs']['triggerExecution'] for p in progress]}")
     if not b.trace:
         b.stop()
@@ -526,7 +531,7 @@ def run_stream(b: Bench, workload: str) -> dict:
     _add_batch_spans(b.tracer, t_progress)
 
     def dur(k: str) -> float:
-        return _median([p["durationMs"].get(k, 0) for p in t_progress[1:]])
+        return _median([p["durationMs"].get(k, 0) for p in t_progress[STREAM_RAMP:]])
 
     layers = _layer_split(prefix)
     layers.update(eventlog.layer_counters(_read_log(log_dir), "timed", len(t_progress)))
@@ -540,8 +545,8 @@ def run_stream(b: Bench, workload: str) -> dict:
             "stream.latest_offset_ms": dur("latestOffset"),
         }
     )
-    t_steady = [p["durationMs"]["triggerExecution"] / 1000 for p in t_progress[1:]]
-    untraced = [ms / 1000 for ms in steady] + [p["durationMs"]["triggerExecution"] / 1000 for p in a_progress[1:]]
+    t_steady = [p["durationMs"]["triggerExecution"] / 1000 for p in t_progress[STREAM_RAMP:]]
+    untraced = [ms / 1000 for ms in steady] + [p["durationMs"]["triggerExecution"] / 1000 for p in a_progress[STREAM_RAMP:]]
     metrics = _finish_trace(b, workload, layers, untraced, t_steady)
     return _result(3 * n_files, n_files * (bool(fails) + bool(t_fails) + bool(a_fails)), metrics, layer_unit)
 
