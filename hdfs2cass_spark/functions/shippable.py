@@ -1,6 +1,6 @@
 """Ship UDF-referenced modules by value.
 
-Functions created inside factories (token UDF, wire encoders) pickle as
+Functions created inside factories (media codecs, wire encoders) pickle as
 closures, but their globals that live in THIS package pickle **by reference**
 — executors then try `import hdfs2cass_spark` and fail unless the package is
 on every worker's PYTHONPATH. The driver gate (and any real cluster without

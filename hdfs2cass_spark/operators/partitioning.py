@@ -7,9 +7,9 @@ re-sorting (SURVEY.md §2.1 G1-G3;
 CassandraKeyComparator.java:32-89, CassandraParams.java:288-334).
 
 Spark-first design (100 TB rationale):
-  - token: one Arrow-batched pandas UDF (Cassandra Murmur3 has no JVM built-in
-    equivalent; xxhash64/hash are different algorithms). Everything else stays
-    in Catalyst.
+  - token: one Java UDF (functions/murmur3_jvm.py). Cassandra Murmur3 has no
+    Spark built-in equivalent (xxhash64/hash are different algorithms), but as
+    a JVM function it stays in whole-stage codegen: no row crosses to Python.
   - bucket: pure column arithmetic over fixed ring boundaries —
     ``(token - MIN) div range_per_bucket`` — NOT repartitionByRange (which
     *samples* boundaries; the ring gives us exact ones for free).
@@ -33,7 +33,8 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.murmur3 import MIN_TOKEN, token_pandas_udf
+from ..functions.murmur3 import MIN_TOKEN
+from ..functions.murmur3_jvm import register_token_function
 
 RING_SIZE = 2**64  # Murmur3 LongToken ring
 
@@ -44,8 +45,8 @@ def with_token(df: DataFrame, key_col: str, token_col: str = "token") -> DataFra
     `key_col` may be StringType (tokenized as UTF-8 bytes) or BinaryType
     (composite keys pre-composed via functions.serde.compose_partition_key).
     """
-    tok = token_pandas_udf()
-    return df.withColumn(token_col, tok(F.col(key_col)))
+    name = register_token_function(df.sparkSession)
+    return df.withColumn(token_col, F.call_function(name, F.col(key_col).cast("binary")))
 
 
 def bucket_expr(token_col: str, num_buckets: int) -> Column:
@@ -191,7 +192,7 @@ def binary_key_expr(df: DataFrame, cols: list[str]) -> Column:
     Integer components use Cassandra's fixed-width big-endian encoding built
     from hex (two's-complement for negatives comes out of Spark's hex() on
     longs; ints take the low 8 hex chars). All JVM-side — no Python in the
-    key path; the token UDF receives ready-made bytes.
+    key path; the token function receives ready-made bytes.
     """
     from pyspark.sql.types import (
         ByteType,

@@ -43,9 +43,10 @@ def get_session(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # larger Arrow batches amortize the per-batch numpy setup in the token
-        # UDF: 10k -> 64k batches doubled end-to-end bulk-load throughput
-        # (0.69 -> 1.41M rows/s on local[32], 5M-row stress run)
+        # larger Arrow batches amortize the per-batch numpy setup of the
+        # pandas UDFs (the MD5 token branch, the mapInPandas decoders and
+        # curation kernels); the Murmur3 token is a JVM function and sends no
+        # Arrow batches
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.speculation", "false")

@@ -23,6 +23,33 @@ from ..operators.partitioning import binary_key_expr, route_to_buckets
 from ..operators.reshape import reshape_cql, resolve_rowkey
 
 
+def route_batch(
+    batch_df: DataFrame,
+    params: CassandraParams,
+    rowkey: str | None = None,
+    timestamp: str | None = None,
+    ttl: str | None = None,
+    ignore: Sequence[str] = (),
+    now_ms: int | None = None,
+) -> DataFrame:
+    """One micro-batch through reshape -> token -> bucket route.
+
+    Tokens come from the TYPED key bytes (_pk), exactly like the batch
+    pipeline — tokenizing the stringified rowkey diverges from the real ring
+    for every non-string key. The bucket repartition is the batch's only
+    shuffle: the token is a JVM function, so nothing needs spreading first.
+    """
+    rk = resolve_rowkey(batch_df.columns, rowkey)
+    keyed = batch_df.withColumn("_pk", binary_key_expr(batch_df, [rk]))
+    reshaped = reshape_cql(keyed, rk, timestamp, ttl, ignore, now_ms=now_ms, passthrough=["_pk"])
+    return route_to_buckets(
+        reshaped,
+        params.num_partitions(),
+        key_col="_pk",
+        distribute_randomly=params.distribute_randomly,
+    )
+
+
 def stream_bulk_load(
     stream: DataFrame,
     output_uri: str,
@@ -37,24 +64,9 @@ def stream_bulk_load(
 ):
     """Start the streaming bulk-load query; returns the StreamingQuery."""
     params = CassandraParams.parse(output_uri)
-    n = params.num_partitions()
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # tokens come from the TYPED key bytes (_pk), exactly like the batch
-        # pipeline — tokenizing the stringified rowkey diverges from the real
-        # ring for every non-string key. The upfront repartition spreads a
-        # one-file micro-batch (ONE scan partition) so the token UDF doesn't
-        # run single-core before the bucket shuffle.
-        rk = resolve_rowkey(batch_df.columns, rowkey)
-        npart = batch_df.sparkSession.sparkContext.defaultParallelism
-        batch_df = batch_df.repartition(npart)
-        keyed = batch_df.withColumn("_pk", binary_key_expr(batch_df, [rk]))
-        reshaped = reshape_cql(
-            keyed, rk, timestamp, ttl, ignore, now_ms=now_ms, passthrough=["_pk"]
-        )
-        routed = route_to_buckets(
-            reshaped, n, key_col="_pk", distribute_randomly=params.distribute_randomly
-        )
+        routed = route_batch(batch_df, params, rowkey, timestamp, ttl, ignore, now_ms)
         routed.write.mode("append").partitionBy("bucket").parquet(sink_path)
 
     writer = stream.writeStream.foreachBatch(write_batch).option(

@@ -21,7 +21,7 @@ SECTIONS = [
     (
         "bulk_load (reference dataflow)",
         "__bulk_load__",
-        "One `ArrowEvalPython` (the token UDF — the only Python hop), ONE `Exchange` on the bucket id, "
+        "No Python node: the token is a Java UDF inside the scan stage's codegen. ONE `Exchange` on the bucket id, "
         "then the in-partition `Sort` that gives the sink its append-only order. The key is TYPED: "
         "`_pk = unhex(lpad(hex(c_custkey)))` — the 8-byte big-endian Cassandra encoding of the bigint, "
         "built JVM-side, tokenized as real ring bytes (`_rowkey` stays as a display column only). The "

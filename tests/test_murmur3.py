@@ -53,16 +53,98 @@ def test_long_keys_and_tails():
     assert cassandra_token(bytes(range(200, 230))) == -1961898924875430197
 
 
-def test_numpy_batch_matches_scalar():
-    """Differential: vectorized batch implementation == scalar spec on random
-    keys covering empty/None, high-bit bytes, all tail lengths, multi-block."""
+def _jvm_tokens(spark, keys, dtype="binary"):
+    """Tokens of `keys` computed by with_token on one DataFrame; the plan is
+    map-only, so rows come back in key order."""
+    from hdfs2cass_spark.operators.partitioning import with_token
+
+    df = spark.createDataFrame([(k,) for k in keys], f"k {dtype}")
+    return [r.token for r in with_token(df, "k").select("token").collect()]
+
+
+def test_jvm_token_goldens_and_empty_keys(spark):
+    keys = list(GOLDENS) + [b"", None]
+    assert _jvm_tokens(spark, keys) == list(GOLDENS.values()) + [MIN_TOKEN, MIN_TOKEN]
+
+
+def test_jvm_token_every_tail_length_with_signed_bytes(spark):
+    """Lengths 0-47 cover every tail length over zero to two full blocks; bytes
+    >= 0x80 exercise Cassandra's sign-extended tail."""
+    keys = [bytes(0x80 + (i * 7 + n) % 128 for i in range(n)) for n in range(48)]
+    assert _jvm_tokens(spark, keys) == [cassandra_token(k) for k in keys]
+
+
+def test_jvm_token_matches_scalar_on_random_keys(spark):
+    """Differential: the JVM function == scalar spec on 20k seeded random
+    binary keys covering empty/None, high-bit bytes, all tail lengths and
+    multi-block keys."""
     import random
 
-    from hdfs2cass_spark.functions.murmur3_np import murmur3_tokens
-
     rnd = random.Random(1234)
-    keys = [bytes(rnd.randrange(256) for _ in range(rnd.randrange(100))) for _ in range(3000)]
+    keys = [rnd.randbytes(rnd.randrange(100)) for _ in range(20_000)]
     keys += [b"", None, b"foo", b"x" * 16, b"y" * 17, b"z" * 1000]
-    got = list(murmur3_tokens(keys))
-    exp = [cassandra_token(k) for k in keys]
-    assert got == exp
+    got = _jvm_tokens(spark, keys)
+    assert sum(g != cassandra_token(k) for g, k in zip(got, keys)) == 0
+
+
+def test_jvm_token_string_and_binary_keys_agree(spark):
+    keys = ["foo", "", None, "ünïcödé", "a" * 40]
+    as_bytes = [None if k is None else k.encode("utf-8") for k in keys]
+    as_str = _jvm_tokens(spark, keys, "string")
+    assert as_str == _jvm_tokens(spark, as_bytes)
+    assert as_str[0] == GOLDENS[b"foo"]
+
+
+def test_jvm_token_survives_session_restart(tmp_path):
+    """The function is registered per session: a new session after
+    spark.stop() in the same process must register it again, not fail."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    script = tmp_path / "restart.py"
+    script.write_text(
+        "from hdfs2cass_spark.operators.partitioning import with_token\n"
+        "from hdfs2cass_spark.session import get_session\n"
+        "for run in range(2):\n"
+        "    spark = get_session(f'restart{run}', master='local[1]', shuffle_partitions=1)\n"
+        "    df = spark.createDataFrame([('foo',)], 'k string')\n"
+        "    print(with_token(df, 'k').first().token)\n"
+        "    spark.stop()\n"
+    )
+    repo = str(Path(__file__).resolve().parents[1])
+    env = dict(os.environ, PYTHONPATH=repo, SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, str(script)], capture_output=True, text=True, env=env, timeout=300
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.split() == [str(GOLDENS[b"foo"])] * 2
+
+
+def test_build_jar_reuses_cached_jar(tmp_path, monkeypatch):
+    import subprocess
+
+    from hdfs2cass_spark.functions import murmur3_jvm
+
+    jar = murmur3_jvm.build_jar(cache_dir=str(tmp_path))
+    assert jar.is_file() and jar.parent == tmp_path
+
+    def no_javac(*a, **k):
+        raise AssertionError("javac ran although the cached jar matches the source")
+
+    monkeypatch.setattr(subprocess, "run", no_javac)
+    assert murmur3_jvm.build_jar(cache_dir=str(tmp_path)) == jar
+    assert [p.name for p in tmp_path.iterdir()] == [jar.name]  # no leftover parts
+
+
+def test_build_jar_without_javac_fails_loudly(tmp_path, monkeypatch):
+    import shutil
+
+    import pytest
+
+    from hdfs2cass_spark.functions import murmur3_jvm
+
+    monkeypatch.setattr(shutil, "which", lambda name: None)
+    with pytest.raises(RuntimeError, match="javac"):
+        murmur3_jvm.build_jar(cache_dir=str(tmp_path))
