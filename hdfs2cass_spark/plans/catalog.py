@@ -152,10 +152,11 @@ def token_route_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     df = with_token(df, "_pk")
     # present_sorted, not bare orderBy: the child is MAP-ONLY (scan -> typed
-    # key encode -> BOTH token UDFs), so the range sampler would re-run the
-    # murmur3 + md5 hops a second time (r13 slope audit: the sf1 probe
-    # measured 4.25 s/Mrow with the double execution, 2.28 without — the
-    # same defect class present.py documents for the report family)
+    # key encode -> both tokens: murmur3 as a JVM function, MD5 as the one
+    # Python hop), so the range sampler would run both a second time (r13
+    # slope audit: the sf1 probe measured 4.25 s/Mrow with the double
+    # execution, 2.28 without — the same defect class present.py documents
+    # for the report family)
     return present_sorted(
         with_bucket(df, 8, shuffle_seed=None).select(
             "c_custkey", "token", "bucket", "md5_token", "md5_bucket"

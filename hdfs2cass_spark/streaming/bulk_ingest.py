@@ -18,36 +18,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 
-from ..config import CassandraParams
-from ..operators.partitioning import binary_key_expr, route_to_buckets
-from ..operators.reshape import reshape_cql, resolve_rowkey
-
-
-def route_batch(
-    batch_df: DataFrame,
-    params: CassandraParams,
-    rowkey: str | None = None,
-    timestamp: str | None = None,
-    ttl: str | None = None,
-    ignore: Sequence[str] = (),
-    now_ms: int | None = None,
-) -> DataFrame:
-    """One micro-batch through reshape -> token -> bucket route.
-
-    Tokens come from the TYPED key bytes (_pk), exactly like the batch
-    pipeline — tokenizing the stringified rowkey diverges from the real ring
-    for every non-string key. The bucket repartition is the batch's only
-    shuffle: the token is a JVM function, so nothing needs spreading first.
-    """
-    rk = resolve_rowkey(batch_df.columns, rowkey)
-    keyed = batch_df.withColumn("_pk", binary_key_expr(batch_df, [rk]))
-    reshaped = reshape_cql(keyed, rk, timestamp, ttl, ignore, now_ms=now_ms, passthrough=["_pk"])
-    return route_to_buckets(
-        reshaped,
-        params.num_partitions(),
-        key_col="_pk",
-        distribute_randomly=params.distribute_randomly,
-    )
+from ..sinks.pipeline import bulk_load
 
 
 def stream_bulk_load(
@@ -62,11 +33,15 @@ def stream_bulk_load(
     now_ms: int | None = None,
     available_now: bool = False,
 ):
-    """Start the streaming bulk-load query; returns the StreamingQuery."""
-    params = CassandraParams.parse(output_uri)
+    """Start the streaming bulk-load query; returns the StreamingQuery.
+
+    Each micro-batch goes through `bulk_load` itself, so it is routed exactly
+    like a batch load (typed-key token, same reshape for the URI's protocol),
+    with the bucket repartition as its only shuffle.
+    """
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        routed = route_batch(batch_df, params, rowkey, timestamp, ttl, ignore, now_ms)
+        routed = bulk_load(batch_df, output_uri, rowkey, timestamp, ttl, ignore, now_ms=now_ms)
         routed.write.mode("append").partitionBy("bucket").parquet(sink_path)
 
     writer = stream.writeStream.foreachBatch(write_batch).option(

@@ -76,12 +76,12 @@ def test_jvm_token_every_tail_length_with_signed_bytes(spark):
 
 def test_jvm_token_matches_scalar_on_random_keys(spark):
     """Differential: the JVM function == scalar spec on 20k seeded random
-    binary keys covering empty/None, high-bit bytes, all tail lengths and
-    multi-block keys."""
+    binary keys of 0-200 bytes covering empty/None, high-bit bytes, all tail
+    lengths and multi-block keys."""
     import random
 
     rnd = random.Random(1234)
-    keys = [rnd.randbytes(rnd.randrange(100)) for _ in range(20_000)]
+    keys = [rnd.randbytes(rnd.randrange(201)) for _ in range(20_000)]
     keys += [b"", None, b"foo", b"x" * 16, b"y" * 17, b"z" * 1000]
     got = _jvm_tokens(spark, keys)
     assert sum(g != cassandra_token(k) for g, k in zip(got, keys)) == 0
@@ -148,3 +148,72 @@ def test_build_jar_without_javac_fails_loudly(tmp_path, monkeypatch):
     monkeypatch.setattr(shutil, "which", lambda name: None)
     with pytest.raises(RuntimeError, match="javac"):
         murmur3_jvm.build_jar(cache_dir=str(tmp_path))
+
+
+def _plant_jar(cache, mode=0o644):
+    """A jar named as the build would name it, holding no classes."""
+    import hashlib
+
+    from hdfs2cass_spark.functions import murmur3_jvm
+
+    digest = hashlib.sha256(murmur3_jvm.SOURCE.read_bytes()).hexdigest()[:16]
+    jar = cache / f"hdfs2cass-murmur3-{digest}.jar"
+    jar.write_bytes(b"planted")
+    jar.chmod(mode)
+    return jar
+
+
+def test_build_jar_rebuilds_jar_others_can_write(tmp_path):
+    """ADD JAR runs the cached jar's classes on every executor: a jar that
+    group or others could have replaced is never trusted."""
+    from hdfs2cass_spark.functions import murmur3_jvm
+
+    planted = _plant_jar(tmp_path, mode=0o666)
+    jar = murmur3_jvm.build_jar(cache_dir=str(tmp_path))
+    assert jar == planted and jar.read_bytes() != b"planted"
+    assert not jar.stat().st_mode & 0o022
+
+
+def test_build_jar_rebuilds_jar_user_does_not_own(tmp_path):
+    import os
+
+    import pytest
+
+    from hdfs2cass_spark.functions import murmur3_jvm
+
+    if os.geteuid() != 0:
+        pytest.skip("handing a file to another user needs root")
+    planted = _plant_jar(tmp_path)
+    os.chown(planted, 65534, 65534)
+    jar = murmur3_jvm.build_jar(cache_dir=str(tmp_path))
+    assert jar.read_bytes() != b"planted" and jar.stat().st_uid == os.getuid()
+
+
+def test_build_jar_skips_cache_dir_user_does_not_own(tmp_path, monkeypatch):
+    """A cache dir owned by someone else (here: the real owner, seen from
+    another uid) is not used at all; the jar is built in a fresh private dir."""
+    import os
+    import shutil
+
+    from hdfs2cass_spark.functions import murmur3_jvm
+
+    _plant_jar(tmp_path)
+    monkeypatch.setattr(os, "getuid", lambda: os.geteuid() + 1)
+    jar = murmur3_jvm.build_jar(cache_dir=str(tmp_path))
+    try:
+        assert jar.parent != tmp_path and jar.read_bytes() != b"planted"
+        assert jar.parent.stat().st_mode & 0o777 == 0o700
+    finally:
+        shutil.rmtree(jar.parent)
+
+
+def test_default_cache_dir_is_private_per_user(tmp_path, monkeypatch):
+    import os
+    import tempfile
+
+    from hdfs2cass_spark.functions import murmur3_jvm
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    d = murmur3_jvm._cache_dir(None)
+    assert d == tmp_path / f"hdfs2cass-{os.getuid()}"
+    assert d.stat().st_mode & 0o777 == 0o700 and d.stat().st_uid == os.getuid()

@@ -89,17 +89,36 @@ def test_bulk_load_single_shuffle_no_python_hop(spark, sf_dir):
     assert "Sort [bucket" in p  # in-partition sort feeding the append-only sink
 
 
-def test_stream_micro_batch_single_shuffle(spark, sf_dir):
-    """A micro-batch (one scan partition from one landed file) is routed by
-    the bucket repartition alone — no upfront spread shuffle."""
-    from hdfs2cass_spark.config import CassandraParams
-    from hdfs2cass_spark.streaming.bulk_ingest import route_batch
+def test_stream_micro_batch_single_shuffle(spark, sf_dir, tmp_path, monkeypatch):
+    """A real micro-batch (one landed file, one scan partition) is routed by
+    the bucket repartition alone — no upfront spread shuffle — and with no
+    Python node."""
+    from hdfs2cass_spark.streaming import bulk_ingest
 
+    plans = []
+
+    def recording_bulk_load(*args, **kwargs):
+        routed = bulk_load(*args, **kwargs)
+        plans.append(_explain(spark, routed))
+        return routed
+
+    monkeypatch.setattr(bulk_ingest, "bulk_load", recording_bulk_load)
     cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    routed = route_batch(cust, CassandraParams.parse("cql://h/ks/t?reducers=8"), "c_custkey")
-    p = _explain(spark, routed)
-    assert p.count("Exchange") == 1
-    assert "EvalPython" not in p
+    cust.coalesce(1).write.parquet(str(tmp_path / "landed"))
+    q = bulk_ingest.stream_bulk_load(
+        spark.readStream.schema(cust.schema).parquet(str(tmp_path / "landed")),
+        "cql://h/ks/t?reducers=8",
+        str(tmp_path / "sink"),
+        str(tmp_path / "ckpt"),
+        rowkey="c_custkey",
+        now_ms=42,
+        available_now=True,
+    )
+    q.awaitTermination()
+    assert q.exception() is None
+    assert len(plans) == 1
+    assert plans[0].count("Exchange") == 1
+    assert "EvalPython" not in plans[0] and "MapInPandas" not in plans[0]
 
 
 def test_semi_anti_join_plans(spark, sf_dir):

@@ -16,6 +16,8 @@ from hdfs2cass_spark.functions.murmur3 import (
 from hdfs2cass_spark.functions.serde import compose_partition_key, to_cassandra_bytes
 
 
+# ~0.4 s per example (one Spark job each); the seeded 20k-key differential in
+# test_murmur3.py covers the same 0-200 byte lengths in bulk
 @settings(max_examples=30, deadline=None)
 @given(st.lists(st.binary(min_size=0, max_size=200), min_size=1, max_size=50))
 def test_jvm_tokens_match_scalar(spark, keys):
